@@ -21,9 +21,28 @@ import graft.synth.DeterministicCorpus.CorpusSpec
   *                         that per-job constants don't dominate the
   *                         docs/sec figure; the scaling evidence runs use
   *                         a larger corpus via scripts/bench_scaling.sh)
+  *   SPARK_GRAFT_WINDOW_TRIES  clean-window probes before measuring
+  *                         (default 6; a whole number ≥ 1)
+  *   SPARK_GRAFT_AB_ROUNDS  interleaved exact/sketch e2e leg pairs
+  *                         (default 3; a whole number ≥ 1)
   */
 object Bench {
+  /** A count knob from the environment: a whole number ≥ 1, or `default`
+    * when unset. Anything else fails with the variable's name, before the
+    * bench spends its window on a run that would crash without an artifact.
+    */
+  private[graft] def positiveCount(env: Map[String, String], name: String, default: Int): Int = {
+    val n = env.get(name).fold(default) { raw =>
+      raw.trim.toIntOption.getOrElse(
+        throw new IllegalArgumentException(s"$name must be a whole number, got '$raw'"))
+    }
+    require(n >= 1, s"$name must be >= 1, got $n")
+    n
+  }
+
   def main(args: Array[String]): Unit = {
+    val windowTries = positiveCount(sys.env, "SPARK_GRAFT_WINDOW_TRIES", 6)
+    val abRounds = positiveCount(sys.env, "SPARK_GRAFT_AB_ROUNDS", 3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val families = sys.env.getOrElse("SPARK_GRAFT_FAMILIES", "400000").toLong
@@ -59,8 +78,6 @@ object Bench {
     // clean window arrives the bench still runs — self-documented by
     // window_ok=false — because a stale artifact is worse than a flagged
     // one.
-    val windowTries =
-      sys.env.getOrElse("SPARK_GRAFT_WINDOW_TRIES", "6").toInt
     var burn = Burn.probe()
     var diskMbs = Burn.diskWriteMBs()
     var windowAttempts = 1
@@ -103,7 +120,6 @@ object Bench {
     val pages = DeterministicCorpus.pages(spark, CorpusSpec(nFamilies = families))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nPages = pages.count() // corpus generation outside the timed window
-    val abRounds = sys.env.getOrElse("SPARK_GRAFT_AB_ROUNDS", "3").toInt
     val tempStores = scala.collection.mutable.ArrayBuffer.empty[StageStore]
     def freshStore(tag: String): StageStore = {
       val s = new StageStore(spark,

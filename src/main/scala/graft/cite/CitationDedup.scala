@@ -161,6 +161,12 @@ object CitationDedup {
     * `find_duplicates(_with_sources)`: assigns `row_idx` by input order,
     * runs the pipeline, and reassembles [[DuplicateGroup]]s (groups ordered
     * by first member).
+    *
+    * Small N only: the citations arrive as a driver-side `Seq`, and every
+    * assigned row is collected back to the driver to build the groups. For
+    * corpora that do not fit the driver, call [[assignGroups]] on a
+    * preprocessed DataFrame and keep its per-row `group_id` / `is_unique`
+    * output distributed.
     */
   def findDuplicates(spark: SparkSession, citations: Seq[Citation],
       opts: DedupOptions = DedupOptions(),

@@ -462,12 +462,17 @@ final class DedupPipeline(spark: SparkSession, config: DedupConfig, store: Stage
       }
   }
 
-  /** Stage 5 — components: union exact + verified edges, run large-star/
-    * small-star to fixpoint. Every `ccDurableInterval`-th star round is
-    * persisted through the StageStore (reliable storage), so a job killed
-    * mid-fixpoint fast-forwards to the last persisted round on resume —
-    * `localCheckpoint` alone is executor-local and would force a full redo
-    * (or a job failure) after an executor loss. 0 disables.
+  /** Stage 5 — components: union exact + verified edges and solve
+    * [[ConnectedComponents]] (component = min id). An edge set within the
+    * driver budget (`edges × 64 bytes × id longs ≤
+    * spark.sql.autoBroadcastJoinThreshold`) is solved by one union-find on
+    * the driver, with no rounds and nothing persisted but the stage itself.
+    * A larger one runs large-star/small-star to fixpoint, and every
+    * `ccDurableInterval`-th star round is persisted
+    * through the StageStore (reliable storage), so a job killed mid-fixpoint
+    * fast-forwards to the last persisted round on resume — `localCheckpoint`
+    * alone is executor-local and would force a full redo (or a job failure)
+    * after an executor loss. 0 disables. Both give the same rows.
     */
   def components(exact: DataFrame, verified: DataFrame): DataFrame =
     store.getOrCompute("components") {

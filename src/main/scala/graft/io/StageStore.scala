@@ -38,38 +38,8 @@ final class StageStore(spark: SparkSession, val root: String) {
     * downstream plans read the materialized table instead of recomputing
     * the producing plan — this is also what cuts union-find lineage).
     */
-  def write(stage: String, df: DataFrame): DataFrame = {
-    val t0 = System.nanoTime()
-    val dir = stageDir(stage)
-    // clean partial output from a previous killed run (no manifest ⇒ junk)
-    if (Files.exists(dir) && !has(stage)) deleteRecursively(dir)
-    df.write.mode("overwrite").parquet(dir.toString)
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    val files = scala.util.Using.resource(Files.list(dir))(
-      _.toArray.map(_.asInstanceOf[Path]))
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    val back = spark.read.parquet(dir.toString)
-    // per-file row counts from the parquet footers — metadata only, no
-    // second scan of the stage data
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val entries = files.map { f =>
-      val rows =
-        try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.toUri), hadoopConf)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try reader.getRecordCount finally reader.close()
-        } catch { case _: Throwable => -1L }
-      s"""{"file":"${f.getFileName}","rows":$rows,"bytes":${Files.size(f)}}"""
-    }
-    val manifest =
-      s"""{"stage":"$stage","status":"complete","wall_ms":$wallMs,
-         |"partitions":[${entries.mkString(",")}]}""".stripMargin
-    val tmp = dir.resolve("_MANIFEST.json.tmp")
-    Files.writeString(tmp, manifest)
-    Files.move(tmp, manifestPath(stage), StandardCopyOption.ATOMIC_MOVE)
-    back
-  }
+  def write(stage: String, df: => DataFrame): DataFrame =
+    commit(stage, df, partitioned = false)
 
   /** Compute-or-read: the resume primitive. A completed stage is never
     * recomputed (`thunk` not invoked).
@@ -92,23 +62,45 @@ final class StageStore(spark: SparkSession, val root: String) {
     * `pkeys` list is lineage metadata (which partitions this layer wrote),
     * not an ownership contract.
     */
-  def writePartitioned(stage: String, df: DataFrame): DataFrame = {
+  def writePartitioned(stage: String, df: => DataFrame): DataFrame =
+    commit(stage, df, partitioned = true)
+
+  def getOrComputePartitioned(stage: String)(thunk: => DataFrame): DataFrame =
+    if (has(stage)) readOrEmpty(stage)
+    else writePartitioned(stage, thunk)
+
+  /** The one stage writer. The clock starts BEFORE `df` is forced, so the
+    * manifest's `wall_ms` covers eager work inside the producing thunk
+    * (checkpoints, connected-components solves, probes) as well as the
+    * parquet write; footer reads for the lineage rows come after it.
+    * `wall_ms` is therefore inclusive: a stage written inside the thunk
+    * (a durable `<prefix>_round_<i>` of the star rounds inside
+    * `components`) is counted in its own manifest AND in the enclosing
+    * one, so a sum over manifests counts it twice.
+    */
+  private def commit(stage: String, df: => DataFrame, partitioned: Boolean): DataFrame = {
     val t0 = System.nanoTime()
     val dir = stageDir(stage)
+    // clean partial output from a previous killed run (no manifest ⇒ junk)
     if (Files.exists(dir) && !has(stage)) deleteRecursively(dir)
-    // cluster rows by pkey BEFORE the partitioned write (Iceberg's
-    // write.distribution-mode=hash): without it every upstream task writes
-    // a file into every pkey directory — N_tasks × N_pkeys tiny files per
-    // layer — and every later pruned read pays thousands of footer opens
-    // (measured: a 640k-page store's state adoption wrote ~1,500 files per
-    // table and a 32k-page delta apply spent most of its wall time opening
-    // them). One shuffle of the layer being written (delta-sized for
-    // batches, corpus-sized only at adoption/compaction) buys one file per
-    // partition directory.
-    df.repartition(col("pkey"))
-      .write.mode("overwrite").partitionBy("pkey").parquet(dir.toString)
+    val frame = df
+    if (partitioned)
+      // cluster rows by pkey BEFORE the partitioned write (Iceberg's
+      // write.distribution-mode=hash): without it every upstream task
+      // writes a file into every pkey directory — N_tasks × N_pkeys tiny
+      // files per layer — and every later pruned read pays thousands of
+      // footer opens (measured: a 640k-page store's state adoption wrote
+      // ~1,500 files per table and a 32k-page delta apply spent most of
+      // its wall time opening them). One shuffle of the layer being
+      // written (delta-sized for batches, corpus-sized only at adoption/
+      // compaction) buys one file per partition directory.
+      frame.repartition(col("pkey"))
+        .write.mode("overwrite").partitionBy("pkey").parquet(dir.toString)
+    else frame.write.mode("overwrite").parquet(dir.toString)
     val wallMs = (System.nanoTime() - t0) / 1000000
     val files = parquetFilesUnder(dir)
+    // per-file row counts from the parquet footers — metadata only, no
+    // second scan of the stage data
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val entries = files.map { f =>
       val rows =
@@ -120,26 +112,29 @@ final class StageStore(spark: SparkSession, val root: String) {
         } catch { case _: Throwable => -1L }
       s"""{"file":"${dir.relativize(f)}","rows":$rows,"bytes":${Files.size(f)}}"""
     }
-    val ownedKeys = pkeyDirs(dir).distinct.sorted
-    // schema sidecar: a partitioned stage whose every owned partition came
-    // out EMPTY (legitimate — e.g. a base corpus with no duplicate edges
-    // leaves the component state empty) has no parquet file to infer a
-    // schema from, yet layered-state readers still need a typed empty frame
-    Files.writeString(dir.resolve("_SCHEMA.json"), df.schema.json)
+    val back =
+      if (!partitioned) spark.read.parquet(dir.toString)
+      else {
+        // schema sidecar: a partitioned stage whose every owned partition
+        // came out EMPTY (legitimate — e.g. a base corpus with no duplicate
+        // edges leaves the component state empty) has no parquet file to
+        // infer a schema from, yet layered-state readers still need a typed
+        // empty frame
+        Files.writeString(dir.resolve("_SCHEMA.json"), frame.schema.json)
+        if (files.isEmpty) frame.limit(0) // all-empty write: nothing to discover
+        else spark.read.parquet(dir.toString)
+      }
+    val pkeys =
+      if (partitioned) s""""pkeys":[${pkeyDirs(dir).distinct.sorted.mkString(",")}],\n"""
+      else ""
     val manifest =
       s"""{"stage":"$stage","status":"complete","wall_ms":$wallMs,
-         |"pkeys":[${ownedKeys.mkString(",")}],
-         |"partitions":[${entries.mkString(",")}]}""".stripMargin
+         |$pkeys"partitions":[${entries.mkString(",")}]}""".stripMargin
     val tmp = dir.resolve("_MANIFEST.json.tmp")
     Files.writeString(tmp, manifest)
     Files.move(tmp, manifestPath(stage), StandardCopyOption.ATOMIC_MOVE)
-    if (files.isEmpty) df.limit(0) // all-empty write: nothing to discover
-    else spark.read.parquet(dir.toString)
+    back
   }
-
-  def getOrComputePartitioned(stage: String)(thunk: => DataFrame): DataFrame =
-    if (has(stage)) readOrEmpty(stage)
-    else writePartitioned(stage, thunk)
 
   /** Read a completed partitioned stage, or — when every owned partition is
     * empty — a typed empty frame from its schema sidecar.

@@ -43,6 +43,17 @@ class CdxSpec extends AnyFunSuite {
     assert(surt("https://example.net/p?") === "net,example)/p")
   }
 
+  test("surtKey: :80 drops only for http or no scheme, :443 only for https") {
+    // 80 is not ftp's default port: a distinct origin keeps it
+    assert(surt("ftp://h.example.org:80/f") === "org,example,h:80)/f")
+    assert(surt("ftp://h.example.org:443/f") === "org,example,h:443)/f")
+    assert(surt("ftp://h.example.org/f") === "org,example,h)/f")
+    assert(surt("http://h.example.org:443/") === "org,example,h:443)/")
+    assert(surt("http://h.example.org:80/") === "org,example,h)/")
+    assert(surt("h.example.org:80") === "org,example,h)/")
+    assert(surt("https://h.example.org:443/") === "org,example,h)/")
+  }
+
   test("parseLines: round trip, malformed lines dropped, numeric casts") {
     import spark.implicits._
     val ts = java.sql.Timestamp.from(java.time.Instant.parse("2026-08-01T12:34:56Z"))

@@ -76,10 +76,17 @@ class DedupPipelineSpec extends AnyFunSuite {
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
 
     // "killed" run: durable every 2nd round, hard iteration cap simulates
-    // the job dying mid-fixpoint — round_2 must be on reliable storage
+    // the job dying mid-fixpoint — round_2 must be on reliable storage.
+    // A broadcast threshold of -1 keeps this small graph on the star
+    // rounds (it would otherwise be solved on the driver, which persists no
+    // rounds); the resume below runs under the session's own threshold.
     val store = freshStore()
-    ConnectedComponents.run(edges, maxIterations = 2,
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try ConnectedComponents.run(edges, maxIterations = 2,
       durable = Some((store, 2)), durablePrefix = "cc").count()
+    finally spark.conf.set(threshold, prior)
     assert(store.has("cc_round_2"), "durable round must persist before the kill")
     val mtime = java.nio.file.Files.getLastModifiedTime(
       java.nio.file.Paths.get(store.root, "cc_round_2", "_MANIFEST.json"))
